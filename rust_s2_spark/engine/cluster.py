@@ -27,14 +27,22 @@ member-valued implies the common label is the component minimum: the
 minimum node's label can never drop below itself.
 
 Scale shape: every step is an equi-shuffle keyed by node id; no driver data
-motion except one-row convergence counts; per-round results are cut with an
-eager localCheckpoint — ESSENTIAL in any iterative DataFrame loop, because
-each round's logical plan embeds the previous one twice and uncut trees
-double per round (measured: 5.7 s -> 23 s per round by round two, hung by
-round ten, with all data cached).  On a resilient cluster deployment use
-``sparkContext.setCheckpointDir`` + ``.checkpoint()`` for the same cut with
-fault tolerance.  Component sizes never appear as shuffle keys — a giant
-component costs no more than a small one.
+motion except one-row convergence counts; the symmetric input and every
+per-round result are cut with an eager localCheckpoint — ESSENTIAL in any
+iterative DataFrame loop, because each round's logical plan embeds the
+previous one twice and uncut trees double per round (measured: 5.7 s -> 23 s
+per round by round two, hung by round ten, with all data cached).  The input
+is cut too, not persisted: a persisted frame keeps its full lineage, so every
+round, and the certificate, would make the driver re-analyse the caller's
+plan (a distance join, say) even though the data comes from the cache.  On a
+resilient cluster deployment use ``sparkContext.setCheckpointDir`` +
+``.checkpoint()`` for the same cut with fault tolerance.  Component sizes
+never appear as shuffle keys — a giant component costs no more than a small
+one.
+
+Checkpoint blocks are released explicitly (:func:`release`) as soon as
+nothing lazy reads them, so a call leaves exactly one persisted RDD behind:
+the returned labels' leaf.
 """
 
 from __future__ import annotations
@@ -42,7 +50,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["connected_components"]
+__all__ = ["connected_components", "release"]
+
+
+def release(df: DataFrame) -> None:
+    """Free the cached blocks ``df`` reads: its own persisted relation, and
+    the RDD behind every checkpoint leaf (``LogicalRDD``) in its plan.
+
+    ``DataFrame.unpersist()`` alone does nothing for a checkpointed frame —
+    the leaf's RDD would stay in storage until garbage collection.  Call
+    this strictly after the last consumer: reading a released local
+    checkpoint raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+    """
+    df.unpersist()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def connected_components(
@@ -59,10 +84,11 @@ def connected_components(
     Deterministic: the fixpoint (min reachable id per node) does not depend
     on iteration order or partitioning.
     """
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    sym = sym.persist()
+    sym = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .localCheckpoint(eager=True)
+    )
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -75,6 +101,8 @@ def connected_components(
     while True:
         rounds += 1
         if rounds > max_rounds:
+            for df in (sym, live, labels):
+                release(df)
             raise RuntimeError(
                 f"connected_components did not converge in {max_rounds} rounds"
             )
@@ -104,6 +132,7 @@ def connected_components(
             .where(F.col("lbl") != F.col("pl"))
             .count()
         )
+        release(labels)  # superseded: jumped is a materialized leaf
         labels = jumped
         if changed == 0:
             break
@@ -113,7 +142,7 @@ def connected_components(
         # connectivity; the final uniformity check below guards the claim.
         lu = labels.select(F.col("node").alias("cu"), F.col("lbl").alias("lu"))
         lv = labels.select(F.col("node").alias("cv"), F.col("lbl").alias("lv"))
-        live = (
+        contracted = (
             live.join(lu, live["u"] == lu["cu"])
             .join(lv, live["v"] == lv["cv"])
             .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
@@ -121,6 +150,11 @@ def connected_components(
             .distinct()
             .localCheckpoint(eager=True)
         )
+        if live is not sym:
+            release(live)
+        live = contracted
+    if live is not sym:
+        release(live)
     if stats is not None:
         stats["rounds"] = rounds
 
@@ -135,11 +169,13 @@ def connected_components(
         .where(F.col("lu") != F.col("lv"))
         .count()
     )
-    sym.unpersist()
+    release(sym)
     if violations:
+        release(labels)
         raise AssertionError(
             f"connected_components fixpoint violated on {violations} edges"
         )
-    # labels is a checkpointed leaf: O(|V|) rows, shallow plan — callers own
-    # its lifecycle (the checkpoint blocks free on garbage collection)
+    # labels is a checkpointed leaf: O(|V|) rows, shallow plan — the only
+    # block this call leaves persisted.  Callers own its lifecycle: free it
+    # with release() once nothing reads the returned frame.
     return labels.select(F.col("node"), F.col("lbl").alias("cluster"))

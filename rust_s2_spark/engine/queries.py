@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap, Rect
 from . import specs, tiling
+from .cluster import release
 from .join import cap_join, rect_join, covering_join
 from .polyjoin import broadcast_memo_key, loop_join, loop_regions, session_broadcast
 from ..kernel import hierarchy as h
@@ -104,30 +105,27 @@ _GEO_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def clear_geo_cache() -> None:
-    """Unpersist + drop the memoized tiled-events tables (bench harness:
-    called after warmup so the first timed query pays the materialization
-    it would pay in production).  Also reclaims query-scoped persists
-    registered by the kNN cell-ring search and embed_dedup."""
-    for df in _GEO_CACHE.values():
+    """Release + drop the memoized tables (bench harness: called after
+    warmup so the first timed query pays the materialization it would pay
+    in production).  Also reclaims query-scoped intermediates registered by
+    the kNN cell-ring search, embed_dedup and the component queries.
+    Persisted and checkpointed frames alike are freed (``release``): no
+    block a memo created outlives the clear."""
+    from .knn import clear_knn_cache
+
+    for df in [
+        *_GEO_CACHE.values(),
+        *_AUX_PERSISTS,
+        *_AUX_CACHE.values(),
+        *_DBSCAN_WIDE_CACHE.values(),
+    ]:
         try:
-            df.unpersist()
+            release(df)
         except Exception:
             pass
     _GEO_CACHE.clear()
-    from .knn import clear_knn_cache
-
     clear_knn_cache()
-    for df in _AUX_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
     _AUX_PERSISTS.clear()
-    for df in _AUX_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
     _AUX_CACHE.clear()
     _EMBED_CACHE.clear()
     _KNN_RESULT_CACHE.clear()
@@ -2332,11 +2330,16 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hit
     from .cluster import connected_components
 
-    # persist the epsilon edges: sym / degrees / core-edge restriction /
-    # border assignment all consume them — unpersisted, every one of those
-    # materializations would re-run the full distance join
-    edges = q_distance_join(spark, sf_dir).select("event_a", "event_b").persist()
-    _AUX_PERSISTS.append(edges)
+    # the epsilon edges and the core set are checkpoint LEAVES: sym /
+    # degrees / core-edge restriction / the component loop / border
+    # assignment all consume them.  Persisted instead, they would keep the
+    # distance-join lineage, and every one of those actions would make the
+    # driver re-analyse that tree although the rows come from the cache.
+    edges = (
+        q_distance_join(spark, sf_dir)
+        .select("event_a", "event_b")
+        .localCheckpoint(eager=True)
+    )
     sym = edges.select(
         F.col("event_a").alias("node"), F.col("event_b").alias("nbr")
     ).unionByName(
@@ -2346,9 +2349,8 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     core = (
         deg.where(F.col("nnb") + F.lit(1) >= F.lit(specs.DBSCAN_MINPTS))
         .select("node")
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    _AUX_PERSISTS.append(core)
     core_edges = edges.join(
         core.select(F.col("node").alias("event_a")), on="event_a"
     ).join(core.select(F.col("node").alias("event_b")), on="event_b")
@@ -2365,7 +2367,6 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _AUX_PERSISTS.append(core_lbl)
     border = (
         sym.join(
             core_lbl.select(
@@ -2395,18 +2396,20 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lat",
             "lng",
         )
-        # checkpoint the LABELS (wide: with the point coordinates), not
-        # just the epsilon-graph intermediates: s2_dbscan re-reads them
-        # every warm pass and s2_cluster_stats aggregates over them.
-        # localCheckpoint rather than persist because the label plan embeds
-        # the full distance-join + component trees: with persist, every
-        # downstream ACTION re-analyzes that tree on the driver (measured
-        # 1.7-2.0 s per action on a fully cached 100k-row table); the
-        # checkpoint cuts the lineage to a LogicalRDD leaf.  Same
-        # cluster-deployment note as engine/cluster.py: use a reliable
-        # checkpoint dir for fault tolerance.
+        # checkpoint the LABELS (wide: with the point coordinates):
+        # s2_dbscan re-reads them every warm pass and s2_cluster_stats
+        # aggregates over them.  localCheckpoint rather than persist: the
+        # driver analyses a leaf, not the label plan, on every downstream
+        # action (a persisted deep plan cost 1.7-2.0 s per action on a
+        # fully cached 100k-row table), and the leaf reads none of the
+        # intermediates, which are released below.  Same note as
+        # engine/cluster.py: use a reliable checkpoint dir for fault
+        # tolerance.
         .localCheckpoint(eager=True)
     )
+    # wide is materialized; nothing lazy reads the intermediates any more
+    for df in (edges, core, core_lbl, cc):
+        release(df)
     out = wide.select("event_id", "role", "cluster_id")
     _DBSCAN_RESULT_CACHE[key] = out
     _DBSCAN_WIDE_CACHE[key] = wide
@@ -4295,9 +4298,9 @@ def q_line_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_crossing_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geofence crossings WITH the intersection coordinates: for every
     properly-crossing (step, segment) pair, the point where the two great
-    circles meet — rust-s2's edgeutil get_intersection
-    (edgeutil.rs:228-269) exported as a relational operator ("WHERE did
-    the user cross the border, not just whether").
+    circles meet — rust-s2's intersection (edge_crossings.rs:159)
+    exported as a relational operator ("WHERE did the user cross the
+    border, not just whether").
 
     The point is (a x b) x (c x d) normalized, sign-oriented toward the
     step's midpoint chord (a+b) — for a proper crossing the intersection
@@ -4321,11 +4324,14 @@ def _intersection_latlng_cols(
     a: tuple[Column, Column, Column],
     b: tuple[Column, Column, Column],
 ) -> tuple[Column, Column]:
-    """get_intersection emission (edgeutil.rs:228-269) shared by
+    """Intersection emission (edge_crossings.rs:159 intersection) shared by
     s2_crossing_points and s2_self_intersect: r = (ab x cd) sign-oriented
     toward the arc midpoint chord (a + b), normalized, 6-dp atan2 lat/lng
     (atan2 latitude so ulp-scale |z| > 1 can never NaN).  ONE op tree for
-    both queries so their op-mirroring oracles cannot silently diverge."""
+    both queries so their op-mirroring oracles cannot silently diverge.
+    The naive (ab x cd) form oriented to a+b, without the reference's
+    stable/exact fallbacks, is intentional: for proper crossings it agrees
+    at the 6-dp rounding both engines emit."""
     abx, aby, abz = ab
     cdx, cdy, cdz = cd
     ax_, ay_, az_ = a
@@ -4350,7 +4356,8 @@ def line_crossing_frame(st: DataFrame, points: bool = False) -> DataFrame:
     streaming pipeline so both run the IDENTICAL codegen predicate.
 
     ``points=True`` additionally emits the great-circle intersection
-    coordinates (the get_intersection analog) for each crossing."""
+    coordinates (the edge_crossings.rs intersection analog) for each
+    crossing."""
     segs = []
     for i, (c, d) in enumerate(specs.polyline_segments_xyz()):
         cd = (
@@ -4401,8 +4408,8 @@ def line_crossing_frame(st: DataFrame, points: bool = False) -> DataFrame:
     ]
     if points:
         # intersection = (ab x cd), sign-oriented toward the arc midpoint
-        # chord (a+b), normalized — edgeutil.rs get_intersection semantics
-        # for a proper crossing.  Op order mirrored by the oracle.
+        # chord (a+b), normalized — edge_crossings.rs:159 intersection
+        # semantics for a proper crossing.  Op order mirrored by the oracle.
         lat, lng = _intersection_latlng_cols(
             (abx, aby, abz),
             (F.col("s.cdx"), F.col("s.cdy"), F.col("s.cdz")),
@@ -4417,8 +4424,8 @@ def q_self_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory self-intersection detection: every pair of non-adjacent
     steps of the SAME user whose great-circle segments properly cross,
     with the crossing coordinates — the EdgeCrosser predicate
-    (edgeutil.rs:96-113 simple_crossing) plus get_intersection
-    (edgeutil.rs:228-269) turned inward ("where does the user's own track
+    (edgeutil.rs:96-113 simple_crossing) plus intersection
+    (edge_crossings.rs:159) turned inward ("where does the user's own track
     loop over itself" — the GPS loop/backtrack signal trajectory cleaning
     and map-matching pipelines key on).
 

@@ -7,8 +7,10 @@ graph in O(log n) rounds where plain hash-min needs O(n))."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
-from rust_s2_spark.engine.cluster import connected_components
+from rust_s2_spark.engine.cluster import connected_components, release
 
 
 def _union_find(n_edges):
@@ -151,12 +153,19 @@ def test_dbscan_matches_brute_force_sf001(spark):
 def test_dbscan_all_noise_degenerate(spark):
     """sf0.001's epsilon graph has max degree 1 < minPts-1: every event is
     noise and no core machinery fires (the empty-core-edge-set branch of
-    connected_components)."""
+    connected_components).  q_dbscan -> clear_geo_cache -> q_dbscan (and
+    s2_cluster_stats) returns identical rows: the rebuild reads no block the
+    clear, or q_dbscan's own release of its intermediates, freed."""
     from rust_s2_spark.engine.queries import QUERIES, clear_geo_cache
 
-    rows = QUERIES["s2_dbscan"](spark, "/root/testdata/sf0.001").collect()
+    sf = "/root/testdata/sf0.001"
+    rows = sorted(QUERIES["s2_dbscan"](spark, sf).collect())
     assert len(rows) == 1000
     assert all(r.role == "noise" and r.cluster_id == -1 for r in rows)
+    stats = sorted(QUERIES["s2_cluster_stats"](spark, sf).collect())
+    clear_geo_cache()
+    assert sorted(QUERIES["s2_dbscan"](spark, sf).collect()) == rows
+    assert sorted(QUERIES["s2_cluster_stats"](spark, sf).collect()) == stats
     clear_geo_cache()
 
 
@@ -182,3 +191,67 @@ def test_query_matches_union_find_on_real_pairs(spark):
     assert all(v[1] == sizes[v[0]] for v in out.values())
     assert len(out) > 20
     clear_geo_cache()
+
+
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _joined_edges(spark):
+    """Edges built through joins over a PERSISTED input (the shape q_dbscan
+    hands the loop: a deep plan whose rows come from a cache): points share
+    an edge when they sit in the same bucket and their ids differ by at most
+    3.  Returns (edge frame, persisted points, the edges as python pairs)."""
+    rng = np.random.RandomState(11)
+    pts = spark.createDataFrame(
+        [(int(i), int(b)) for i, b in enumerate(rng.randint(0, 9, 240))],
+        "id long, bucket long",
+    ).persist()
+    pts.count()
+    a = pts.select(F.col("id").alias("src"), F.col("bucket").alias("ba"))
+    b = pts.select(F.col("id").alias("dst"), F.col("bucket").alias("bb"))
+    edges = (
+        a.join(b, F.col("ba") == F.col("bb"))
+        .where((F.col("src") < F.col("dst")) & (F.col("dst") - F.col("src") <= 3))
+        .select("src", "dst")
+    )
+    pairs = [(r.src, r.dst) for r in edges.collect()]
+    return edges, pts, pairs
+
+
+def test_joins_over_persisted_input_match_union_find(spark):
+    edges, pts, pairs = _joined_edges(spark)
+    assert len(pairs) > 20
+    got = {r.node: r.cluster for r in connected_components(edges).collect()}
+    assert got == _union_find(pairs)
+    pts.unpersist()
+
+
+def test_only_the_labels_leaf_stays_persisted(spark):
+    """Every round's checkpoint, the symmetric edge leaf and each superseded
+    contracted edge set are released before the call returns: the persisted
+    RDDs afterwards are the ones before plus exactly the returned labels'
+    leaf."""
+    edges, pts, _ = _joined_edges(spark)
+    before = _persisted_ids(spark)
+    stats = {}
+    got = connected_components(edges, stats=stats)
+    after = _persisted_ids(spark)
+    assert stats["rounds"] >= 2  # several rounds' leaves were released
+    leaves = got._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() == 1
+    assert after - before == {leaves.apply(0).rdd().id()}
+    release(got)
+    assert _persisted_ids(spark) - before == set()
+    pts.unpersist()
+
+
+def test_non_convergence_releases_its_checkpoints(spark):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "src long, dst long"
+    )
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_rounds=1)
+    assert _persisted_ids(spark) - before == set()
+
