@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from ..kernel import hierarchy as h
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap
+from . import memo
 from .join import covering_join
 
 import numpy as np
@@ -61,20 +62,6 @@ import numpy as np
 _COVER_SCHEMA = (
     "region_id string, cover_cell long, cover_level int, range_min long, range_max long"
 )
-
-# Persisted intermediates (candidate blocks + input projections) registered
-# for reclamation by queries.clear_geo_cache / the bench harness.  Keyed
-# list, not dict: entries are unpersisted and dropped together.
-_KNN_PERSISTS: list[DataFrame] = []
-
-
-def clear_knn_cache() -> None:
-    for df in _KNN_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _KNN_PERSISTS.clear()
 
 
 def _gen_coverings(max_cells: int):
@@ -121,7 +108,9 @@ def knn_cellring(
     (query_id, id_col, rank, d2) for the exact k nearest docs per query.
 
     Query ids must not contain '|' (used as the round-tag separator in the
-    composite covering key).
+    composite covering key).  The persisted candidate blocks the result
+    reads are held in the session memo (``memo.hold``) and freed by its
+    ``clear()``.
     """
     coverer = RegionCoverer(max_cells=12)
     if any("|" in qid for qid, *_ in queries):
@@ -134,7 +123,7 @@ def knn_cellring(
     we_persisted = not (lvl.useMemory or lvl.useDisk)
     if we_persisted:
         proj = proj.persist()
-        _KNN_PERSISTS.append(proj)
+        memo.hold(proj)
     px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
     py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
     pz = F.sin(F.radians("lat"))
@@ -166,7 +155,7 @@ def knn_cellring(
             .mapInPandas(_gen_coverings(coverer.max_cells), schema=_COVER_SCHEMA)
             .persist()
         )
-        _KNN_PERSISTS.append(coverings)
+        memo.hold(coverings)
         levels = sorted(
             r["cover_level"]
             for r in coverings.select("cover_level").distinct().collect()
@@ -189,7 +178,7 @@ def knn_cellring(
             .select("query_id", "round", id_col, "d2")
             .persist()
         )
-        _KNN_PERSISTS.append(cand)
+        memo.hold(cand)
         # ONE aggregation: each query's smallest round holding >= k in-radius
         # candidates (done/pending transition entirely distributed)
         done = (

@@ -15,6 +15,8 @@ negative, faces 0-3 positive; a range is always within one face).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -26,7 +28,6 @@ from ..kernel.constants import MAX_LEVEL, NUM_FACES, POS_BITS
 
 __all__ = [
     "leaf_cellid_udf",
-    "cellid_to_latlng_udf",
     "cellid_to_token_udf",
     "with_leaf_cellid",
     "parent_col",
@@ -38,10 +39,6 @@ __all__ = [
     "face_col",
 ]
 
-
-# pandas UDFs are built lazily (decorating at import time requires an active
-# SparkSession for DDL-type parsing); factories are memoized per process.
-_UDF_CACHE: dict[str, object] = {}
 
 # Canonical 4-bit Hilbert LOOKUP_POS (1024 entries) packed big-endian
 # 2-bytes-per-entry into ONE BinaryType literal.  Why binary, not array: a
@@ -58,64 +55,34 @@ _LOOKUP_POS_BYTES = bytes(
 )
 
 
+# pandas UDFs are built lazily (decorating at import time requires an active
+# SparkSession for DDL-type parsing); factories are memoized per process.
+@functools.cache
 def leaf_cellid_udf():
-    """(lat_deg, lng_deg) -> leaf CellID as i64 (bit-pattern of the u64 id)."""
-    if "leaf" not in _UDF_CACHE:
+    """(lat_deg, lng_deg) -> leaf CellID as i64 (bit-pattern of the u64 id):
+    the numpy kernel behind an Arrow UDF, the reference the pure-Column
+    encode of :func:`with_leaf_cellid` must bit-match."""
 
-        @pandas_udf("long")
-        def _leaf(lat: pd.Series, lng: pd.Series) -> pd.Series:
-            cid = hilbert.cellid_from_latlng(
-                lat.to_numpy(np.float64), lng.to_numpy(np.float64)
-            )
-            return pd.Series(cid.view(np.int64))
+    @pandas_udf("long")
+    def _leaf(lat: pd.Series, lng: pd.Series) -> pd.Series:
+        cid = hilbert.cellid_from_latlng(
+            lat.to_numpy(np.float64), lng.to_numpy(np.float64)
+        )
+        return pd.Series(cid.view(np.int64))
 
-        _UDF_CACHE["leaf"] = _leaf
-    return _UDF_CACHE["leaf"]
-
-
-def leaf_cellid_xyz_udf():
-    """(x, y, z) unit vector -> leaf CellID as i64 (cellid.rs:862-869
-    from_point path) — the encode entry for DERIVED points (step midpoints,
-    interpolations) that never existed as a lat/lng row."""
-    if "leaf_xyz" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _leaf_xyz(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-            cid = hilbert.cellid_from_xyz(
-                x.to_numpy(np.float64),
-                y.to_numpy(np.float64),
-                z.to_numpy(np.float64),
-            )
-            return pd.Series(cid.view(np.int64))
-
-        _UDF_CACHE["leaf_xyz"] = _leaf_xyz
-    return _UDF_CACHE["leaf_xyz"]
+    return _leaf
 
 
-def cellid_to_latlng_udf():
-    """CellID i64 -> cell-center (lat, lng) degrees."""
-    if "center" not in _UDF_CACHE:
-
-        @pandas_udf("struct<lat:double, lng:double>")
-        def _center(cid: pd.Series) -> pd.DataFrame:
-            lat, lng = hilbert.cellid_to_latlng(cid.to_numpy(np.int64).view(np.uint64))
-            return pd.DataFrame({"lat": lat, "lng": lng})
-
-        _UDF_CACHE["center"] = _center
-    return _UDF_CACHE["center"]
-
-
+@functools.cache
 def cellid_to_token_udf():
     """CellID i64 -> canonical hex token (debug/interchange, not hot path)."""
-    if "token" not in _UDF_CACHE:
-        from ..kernel.hierarchy import to_token
+    from ..kernel.hierarchy import to_token
 
-        @pandas_udf("string")
-        def _token(cid: pd.Series) -> pd.Series:
-            return cid.map(lambda v: to_token(np.int64(v).view(np.uint64)))
+    @pandas_udf("string")
+    def _token(cid: pd.Series) -> pd.Series:
+        return cid.map(lambda v: to_token(np.int64(v).view(np.uint64)))
 
-        _UDF_CACHE["token"] = _token
-    return _UDF_CACHE["token"]
+    return _token
 
 
 def with_leaf_cellid(
@@ -123,7 +90,6 @@ def with_leaf_cellid(
     lat_col: str = "lat",
     lng_col: str = "lng",
     out: str = "cell_id",
-    use_udf: bool = False,
 ) -> DataFrame:
     """(lat_deg, lng_deg) -> leaf CellID column, PURE Spark Column math.
 
@@ -148,11 +114,7 @@ def with_leaf_cellid(
       directly on an inlined encode took ~100 s of rewrite + interpreted
       fallback).  The value is exactly deterministic, so re-execution is
       safe; unused-column pruning still removes the encode entirely.
-
-    ``use_udf=True`` keeps the Arrow-UDF variant for A/B runs.
     """
-    if use_udf:
-        return df.withColumn(out, leaf_cellid_udf()(F.col(lat_col), F.col(lng_col)))
     lat, lng = F.col(lat_col), F.col(lng_col)
     P = "__s2_"  # temp-column prefix, dropped at the end
     lat_r, lng_r = F.radians(lat), F.radians(lng)

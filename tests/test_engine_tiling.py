@@ -114,11 +114,9 @@ def test_column_encode_bitmatch_udf_on_fixture(spark):
 
     geo = events_geo(spark, "/root/testdata/sf0.001").drop("cell_id")
     col_df = tiling.with_leaf_cellid(geo, out="c").select("event_id", "c").toPandas()
-    udf_df = (
-        tiling.with_leaf_cellid(geo, out="c", use_udf=True)
-        .select("event_id", "c")
-        .toPandas()
-    )
+    udf_df = geo.select(
+        "event_id", tiling.leaf_cellid_udf()(F.col("lat"), F.col("lng")).alias("c")
+    ).toPandas()
     merged = col_df.merge(udf_df, on="event_id", suffixes=("_col", "_udf"))
     assert len(merged) == len(col_df) == 1000
     assert (merged["c_col"] == merged["c_udf"]).all()
